@@ -36,11 +36,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.catalog import Graph
-from graph_data_science_spark.pregel import PregelComputation, PregelResult, PregelRunner
+from graph_data_science_spark.pregel import (
+    PregelComputation,
+    PregelResult,
+    PregelRunner,
+    _free_local_checkpoint,
+)
 
 
 @dataclass
@@ -71,6 +76,8 @@ class _LabelPropComputation(PregelComputation):
         self.cfg = cfg
         self.node_props = node_props
         self._edges: DataFrame | None = None  # captured for the odd half-step
+        #: this iteration's lazily checkpointed sub-rounds (_adopt)
+        self._sub_rounds: list[DataFrame] = []
 
     def init(self, graph: Graph) -> DataFrame:
         verts = graph.vertices()
@@ -138,6 +145,9 @@ class _LabelPropComputation(PregelComputation):
         )
 
     def send(self, state: DataFrame, edges: DataFrame, iteration: int) -> DataFrame:
+        # the runner has materialized the previous iteration's state
+        # before it sends again, so that iteration's sub-rounds are dead
+        self.free_sub_rounds()
         self._edges = edges
         return self._votes(state, edges)
 
@@ -158,43 +168,43 @@ class _LabelPropComputation(PregelComputation):
                 (new == F.col("label")).alias("_halted"),
             )
         # block Gauss-Seidel: evens adopt phase-1 winners...
-        half1 = (
-            state.join(inbox, "id", "left")
-            .withColumn(
-                "_new",
-                F.when(
-                    F.pmod(F.col("id"), F.lit(2)) == 0,
-                    F.coalesce(F.col("msg"), F.col("label")),
-                ).otherwise(F.col("label")),
-            )
-            .select(
-                "id",
-                F.col("_new").alias("label"),
-                "node_weight",
-                "_halted",
-                F.col("label").alias("_old"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        parity = F.pmod(F.col("id"), F.lit(2))
+        half1 = self._adopt(state, inbox, "id", parity == 0, F.col("label").alias("_old"))
         # ...then odds re-gather against the evens' NEW labels
         inbox2 = self._votes(half1, self._edges)
-        return (
-            half1.join(inbox2, half1.id == inbox2.dst, "left")
-            .withColumn(
-                "_new",
-                F.when(
-                    F.pmod(F.col("id"), F.lit(2)) == 1,
-                    F.coalesce(F.col("msg"), F.col("label")),
-                ).otherwise(F.col("label")),
-            )
-            .withColumn("_halted", F.col("_new") == F.col("_old"))
-            .select(
-                "id",
-                F.col("_new").alias("label"),
-                "node_weight",
-                "_halted",
-            )
+        new = _relabel(parity == 1)
+        return half1.join(inbox2, half1.id == inbox2.dst, "left").select(
+            "id",
+            new.alias("label"),
+            "node_weight",
+            (new == F.col("_old")).alias("_halted"),
         )
+
+    def _adopt(
+        self,
+        state: DataFrame,
+        inbox: DataFrame,
+        on: str | Column,
+        chosen: Column,
+        *keep: str | Column,
+    ) -> DataFrame:
+        """One Gauss-Seidel sub-round as one flat select: the vertices
+        where ``chosen`` holds adopt their inbox winner. The result is
+        lazily localCheckpointed so later sub-rounds re-gather against
+        it without re-deriving it; ``free_sub_rounds`` releases its
+        blocks once the runner has materialized the iteration."""
+        out = (
+            state.join(inbox, on, "left")
+            .select("id", _relabel(chosen).alias("label"), "node_weight", *keep)
+            .localCheckpoint(eager=False)
+        )
+        self._sub_rounds.append(out)
+        return out
+
+    def free_sub_rounds(self) -> None:
+        for df in self._sub_rounds:
+            _free_local_checkpoint(df)
+        self._sub_rounds = []
 
     def _chunk_ordered_step(self, state: DataFrame, inbox: DataFrame) -> DataFrame:
         """One reference-batch-semantics iteration: chunk 0 adopts the
@@ -202,50 +212,28 @@ class _LabelPropComputation(PregelComputation):
         every later chunk re-gathers against the state INCLUDING all
         earlier chunks' new labels — the distributed, deterministic
         analog of the in-place id-ordered sweep."""
-        cols = ["id", "label", "node_weight", "_halted", "_chunk"]
-        cur = (
-            state.join(inbox, "id", "left")
-            .withColumn(
-                "_new",
-                F.when(
-                    F.col("_chunk") == 0,
-                    F.coalesce(F.col("msg"), F.col("label")),
-                ).otherwise(F.col("label")),
-            )
-            .select(
-                "id",
-                F.col("_new").alias("label"),
-                "node_weight",
-                "_halted",
-                "_chunk",
-                F.col("label").alias("_old"),
-            )
-            .localCheckpoint(eager=False)
+        chunk = F.col("_chunk")
+        cur = self._adopt(
+            state, inbox, "id", chunk == 0, "_chunk", F.col("label").alias("_old")
         )
         for c in range(1, self.cfg.chunk_ordered):
             votes = self._votes(cur, self._edges)
-            cur = (
-                cur.join(votes, cur.id == votes.dst, "left")
-                .withColumn(
-                    "_new",
-                    F.when(
-                        F.col("_chunk") == c,
-                        F.coalesce(F.col("msg"), F.col("label")),
-                    ).otherwise(F.col("label")),
-                )
-                .select(
-                    "id",
-                    F.col("_new").alias("label"),
-                    "node_weight",
-                    "_halted",
-                    "_chunk",
-                    "_old",
-                )
-                .localCheckpoint(eager=False)
-            )
-        return cur.withColumn("_halted", F.col("label") == F.col("_old")).select(
-            *cols
+            cur = self._adopt(cur, votes, cur.id == votes.dst, chunk == c, "_chunk", "_old")
+        return cur.select(
+            "id",
+            "label",
+            "node_weight",
+            (F.col("label") == F.col("_old")).alias("_halted"),
+            "_chunk",
         )
+
+
+def _relabel(chosen: Column) -> Column:
+    """The vote rule's update: where ``chosen`` holds, the inbox winner
+    ``msg``, or the current label when the vertex got no votes."""
+    return F.when(chosen, F.coalesce(F.col("msg"), F.col("label"))).otherwise(
+        F.col("label")
+    )
 
 
 def label_propagation(
@@ -260,6 +248,10 @@ def label_propagation(
     runner = PregelRunner(
         spark=spark, max_iterations=cfg.max_iterations, checkpoint_dir=checkpoint_dir
     )
-    res = runner.run(_LabelPropComputation(cfg, graph.nodes), graph, resume=resume)
+    computation = _LabelPropComputation(cfg, graph.nodes)
+    try:
+        res = runner.run(computation, graph, resume=resume)
+    finally:
+        computation.free_sub_rounds()
     res.state = res.state.select("id", "label")
     return res

@@ -59,6 +59,7 @@ def triangle_count(
     degree_ordering: bool = True,
 ) -> TriangleCountResult:
     edges = _simple_edges(graph).persist()
+    deg = fwd = None
     try:
         # undirected simple degree per vertex
         deg = (
@@ -156,7 +157,11 @@ def triangle_count(
             global_count=global_count, local_counts=local, triangles=tris
         )
     finally:
-        edges.unpersist()
+        # only the returned `tris` stays cached; `excluded` and the
+        # lazy local counts recompute from the graph if read again
+        for df in (edges, deg, fwd):
+            if df is not None:
+                df.unpersist()
 
 
 def triangles(

@@ -19,8 +19,9 @@ Spark realization — each superstep is one Catalyst-planned job:
   pre-reduced row per upstream partition, not one row per message.
 * Hub skew: an optional explicit two-phase salted reduce
   (groupBy(dst, salt) then groupBy(dst)) for reducers where partial
-  aggregation is disabled or for extreme fan-in; AQE skew-join
-  handles the join side.
+  aggregation is disabled or for extreme fan-in; the join side is the
+  explicit degree split (Graph.pregel_layout), not AQE: the loop runs
+  with AQE and auto-broadcast off (see PregelRunner.run).
 * Vote-to-halt: a `_halted` state column; only non-halted vertices
   send (the frontier), halted vertices reactivate when a message
   arrives — delta iteration for free.
@@ -407,8 +408,12 @@ class PregelRunner:
         send join (state.id == edges.src) and the apply join
         (state.id == inbox.id) without exchanges — the only shuffle
         left is groupBy(dst), i.e. the actual message delivery. AQE
-        partition coalescing is disabled for the loop so the
-        co-partitioning contract holds (restored on exit).
+        and auto-broadcast are off for the loop (restored on exit): AQE
+        runs each exchange as its own re-planned job and turns small
+        state joins into runtime-broadcast jobs, yet with the layout
+        pinned and hubs split explicitly it has nothing left to fix. A
+        superstep is then one job; explicit F.broadcast hints (the hub
+        split) still apply and still cost one job each.
         """
         conf = self.spark.conf
         session_parts = int(conf.get("spark.sql.shuffle.partitions"))
@@ -419,14 +424,19 @@ class PregelRunner:
             n_parts = max(
                 1, min(session_parts, -(-n_edges // self.edges_per_partition))
             )
-        prev_coalesce = conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
         # pin the session shuffle width to the loop's partition count:
         # the message-delivery groupBy(dst) exchange follows
         # spark.sql.shuffle.partitions, and a mismatch with the
         # state/edge co-partitioning re-introduces an exchange per
-        # superstep join (restored on exit)
-        conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        # superstep join; all three settings are restored on exit
+        pinned = {
+            "spark.sql.shuffle.partitions": str(n_parts),
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        }
+        prev = {k: conf.get(k) for k in pinned}
+        for k, v in pinned.items():
+            conf.set(k, v)
         tid = _task_register(
             f"{type(computation).__name__} on {graph.name}",
             self.max_iterations,
@@ -441,8 +451,8 @@ class PregelRunner:
             _task_finish(tid, "FAILED")
             raise
         finally:
-            conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce)
-            conf.set("spark.sql.shuffle.partitions", str(session_parts))
+            for k, v in prev.items():
+                conf.set(k, v)
 
     def _run_loop(
         self,

@@ -4,7 +4,9 @@ Local-mode defaults mirror what a cluster deployment would set per
 executor: AQE on (runtime skew-join + partition coalescing), shuffle
 partitions sized to cores (not the 200 default), Arrow transport for
 every pandas UDF kernel, UTC session timezone so results compare
-bit-for-bit against external oracles.
+bit-for-bit against external oracles. The Pregel superstep loop
+(``PregelRunner.run``) turns AQE and auto-broadcast off for its own
+span, overriding these defaults, and restores them on exit.
 """
 
 from __future__ import annotations

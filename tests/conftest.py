@@ -26,6 +26,12 @@ def catalog() -> GraphCatalog:
     return GraphCatalog()
 
 
+def persistent_rdd_ids(spark) -> set:
+    """Ids of the RDDs holding block storage (caches and local
+    checkpoints) — to check that a call releases its working caches."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def edge_df(spark, pairs, weights=None):
     """Small literal edge table from (src, dst) int pairs."""
     if weights is None:

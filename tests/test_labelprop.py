@@ -10,7 +10,7 @@ from graph_data_science_spark.algorithms.labelprop import (
     LabelPropagationConfig,
     label_propagation,
 )
-from tests.conftest import LP_EDGES, LP_PARTITION, LP_SEEDS, edge_df
+from tests.conftest import LP_EDGES, LP_PARTITION, LP_SEEDS, edge_df, persistent_rdd_ids
 
 
 def _partition_of(labels: dict) -> list[set]:
@@ -115,3 +115,16 @@ def test_chunk_ordered_midrun_differs_from_blocked(spark, catalog):
     blk2 = label_propagation(spark, g, LabelPropagationConfig(max_iterations=20))
     assert _partition_of({r["id"]: r["label"] for r in seq2.state.collect()}) == \
         _partition_of({r["id"]: r["label"] for r in blk2.state.collect()})
+
+
+def test_labelprop_frees_sub_round_blocks(spark, catalog):
+    """Each iteration's lazily checkpointed half-step is released once
+    the iteration is materialized: a run leaves only its result state
+    in the block manager, however many iterations it ran."""
+    path = [(i, i + 1) for i in range(40)]
+    g = catalog.create("lp_blocks", edge_df(spark, path), persist=True)
+    label_propagation(spark, g, LabelPropagationConfig(max_iterations=1))  # layout
+    before = persistent_rdd_ids(spark)
+    res = label_propagation(spark, g, LabelPropagationConfig(max_iterations=6))
+    assert res.ran_iterations == 6 and not res.did_converge
+    assert len(persistent_rdd_ids(spark) - before) == 1  # the result state

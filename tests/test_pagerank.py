@@ -9,6 +9,7 @@ reference's delta-formulation (PageRankComputation.java:77-97).
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from graph_data_science_spark.algorithms.pagerank import (
     PageRankConfig,
@@ -16,7 +17,9 @@ from graph_data_science_spark.algorithms.pagerank import (
     eigenvector,
     pagerank,
 )
-from tests.conftest import PAGERANK_EDGES, PAGERANK_EXPECTED, edge_df
+from graph_data_science_spark.algorithms.wcc import wcc
+from graph_data_science_spark.pregel import PregelComputation, PregelRunner
+from tests.conftest import PAGERANK_EDGES, PAGERANK_EXPECTED, WCC_EDGES, edge_df
 
 
 def _reference_sim(edges, n, max_iterations=41, tol=0.0, d=0.85):
@@ -207,3 +210,68 @@ def test_katz_alpha_validation():
         KatzConfig(alpha=1.5)
     with pytest.raises(ValueError):
         KatzConfig(alpha=0.5, max_iterations=0)
+
+
+#: session settings PregelRunner.run overrides for the loop only
+_LOOP_CONF = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.shuffle.partitions",
+)
+#: jobs a fresh graph's run spends outside its supersteps (|E|, the
+#: edge layout's degree pass and hub count, degree/undirected caches)
+_SETUP_JOBS = 6
+
+
+class _FailsAtSecondSuperstep(PregelComputation):
+    def __init__(self):
+        self.loop_conf = None
+
+    def init(self, graph):
+        return graph.vertices().select("id", F.lit(False).alias("_halted"))
+
+    def send(self, active, edges, iteration):
+        if iteration == 1:
+            raise RuntimeError("send failed")
+        self.loop_conf = {k: active.sparkSession.conf.get(k) for k in _LOOP_CONF}
+        return edges.select("dst", F.lit(1.0).alias("msg"))
+
+    def step(self, state, inbox, iteration):
+        return state.join(inbox, "id", "left").select("id", F.lit(False).alias("_halted"))
+
+
+def test_pregel_superstep_is_one_job_and_conf_restored(spark, catalog):
+    """With AQE and auto-broadcast off inside the loop, a superstep on a
+    hub-free graph is the one job that materializes its state; the
+    session's settings come back after the run, also when it raises."""
+    sc = spark.sparkContext
+    session_conf = {k: spark.conf.get(k) for k in _LOOP_CONF}
+    runs = (
+        ("pr", PAGERANK_EDGES,
+         lambda g: pagerank(spark, g, PageRankConfig(max_iterations=9, tolerance=0.0))),
+        ("wcc", [(i, i + 1) for i in range(40)] + WCC_EDGES,
+         lambda g: wcc(spark, g)),
+    )
+    for name, edges, algo in runs:
+        group = f"pregel_jobs_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            res = algo(catalog.create(f"pregel_jobs_{name}", edge_df(spark, edges)))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        k = len(res.metrics)
+        assert k >= 5, name
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= k + _SETUP_JOBS, f"{name}: {jobs} jobs for {k} supersteps"
+        assert {c: spark.conf.get(c) for c in _LOOP_CONF} == session_conf
+
+    comp = _FailsAtSecondSuperstep()
+    g = catalog.create("pregel_raises", edge_df(spark, PAGERANK_EDGES))
+    with pytest.raises(RuntimeError, match="send failed"):
+        PregelRunner(spark, max_iterations=5).run(comp, g)
+    assert comp.loop_conf == {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.shuffle.partitions": "1",
+    }
+    assert {c: spark.conf.get(c) for c in _LOOP_CONF} == session_conf

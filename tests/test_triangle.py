@@ -10,7 +10,7 @@ from graph_data_science_spark.algorithms.triangle import (
     local_clustering_coefficient,
     triangle_count,
 )
-from tests.conftest import edge_df
+from tests.conftest import edge_df, persistent_rdd_ids
 
 
 @pytest.mark.parametrize("degree_ordering", [True, False])
@@ -99,7 +99,7 @@ def test_triangles_stream(spark):
     # TriangleProc.java: stream each triangle once, a < b < c
     from graph_data_science_spark.algorithms.triangle import triangles
     from graph_data_science_spark.catalog import Graph
-    from tests.conftest import edge_df
+    from tests.conftest import edge_df, persistent_rdd_ids
 
     g = Graph(
         name="tri_stream",
@@ -115,7 +115,7 @@ def test_triangles_stream(spark):
 def test_triangles_max_degree_guard(spark):
     from graph_data_science_spark.algorithms.triangle import triangles
     from graph_data_science_spark.catalog import Graph
-    from tests.conftest import edge_df
+    from tests.conftest import edge_df, persistent_rdd_ids
 
     # vertex 3 (degree 4) excluded -> its triangles vanish
     g = Graph(
@@ -127,3 +127,15 @@ def test_triangles_max_degree_guard(spark):
         for r in triangles(spark, g, max_degree=3).collect()
     }
     assert got == set()
+
+
+def test_triangle_count_caches_only_its_result(spark, catalog):
+    # the degree and forward-edge tables are working caches: after the
+    # call only the returned triangle table may hold block storage
+    g = catalog.create("tri_cache", edge_df(spark, [(0, 1), (1, 2), (2, 0), (2, 3)]))
+    before = persistent_rdd_ids(spark)
+    res = triangle_count(spark, g, max_degree=5)
+    assert res.global_count == 1
+    assert len(persistent_rdd_ids(spark) - before) == 1
+    res.triangles.unpersist()
+    assert persistent_rdd_ids(spark) - before == set()
