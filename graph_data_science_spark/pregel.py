@@ -25,13 +25,13 @@ Spark realization — each superstep is one Catalyst-planned job:
 * Vote-to-halt: a `_halted` state column; only non-halted vertices
   send (the frontier), halted vertices reactivate when a message
   arrives — delta iteration for free.
-* Checkpoint/resume (north_rule hard requirement): every superstep
-  the new state is written to the checkpoint store (parquet
-  snapshots + JSON lineage manifest; Iceberg adapter when the
-  runtime has the jars) and read back — which doubles as lineage
-  truncation, keeping the logical plan O(1) across supersteps
-  instead of growing per iteration. Resume picks up from the last
-  complete superstep after a driver/executor loss.
+* Lineage: each superstep's eager localCheckpoint cuts the plan (O(1)
+  across supersteps) and keeps the state's hash partitioning.
+* Checkpoint/resume (north_rule hard requirement): that materialized
+  state is also snapshotted to the checkpoint store (parquet plus a
+  JSON lineage manifest, see PregelRunner._write_checkpoint). A fresh
+  run clears an earlier run's snapshots; resume picks up from the last
+  sealed superstep after a driver/executor loss.
 """
 
 from __future__ import annotations
@@ -127,13 +127,12 @@ _REDUCERS: dict[str, Callable[[str], Column]] = {
 class _CheckpointFS:
     """Checkpoint-dir metadata IO (manifest / metrics / listing).
 
-    Plain local paths use direct ``os``/``open`` calls; URI paths
-    (hdfs://, s3a://, file://, ...) route through the JVM's Hadoop
-    FileSystem API via py4j, so the same checkpoint_dir that Spark
-    writes parquet state to also carries the manifests on a real
-    cluster. Object stores don't support append, so per-iteration
-    metrics are written as one small file per superstep on remote
-    stores (and kept as an append-only metrics.jsonl locally).
+    Every operation goes through the JVM's Hadoop FileSystem API via
+    py4j, so the same checkpoint_dir that Spark writes parquet state to
+    (a local path, hdfs://, s3a://, ...) also carries the manifests on
+    a real cluster. Object stores don't support append, so per-iteration
+    metrics are written as one small file per superstep on URI paths
+    (and appended to metrics.jsonl with ``open`` on a local path).
     """
 
     def __init__(self, spark: SparkSession, base: str):
@@ -150,11 +149,6 @@ class _CheckpointFS:
 
     # -- operations ------------------------------------------------------
     def write_text(self, path: str, text: str) -> None:
-        if not self.remote:
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            with open(path, "w") as f:
-                f.write(text)
-            return
         fs, p = self._fs_and_path(path)
         out = fs.create(p, True)
         try:
@@ -173,20 +167,40 @@ class _CheckpointFS:
         )
 
     def exists(self, path: str) -> bool:
-        if not self.remote:
-            return os.path.exists(path)
         fs, p = self._fs_and_path(path)
         return bool(fs.exists(p))
 
     def list_names(self) -> list[str]:
-        if not self.remote:
-            if not os.path.isdir(self.base):
-                return []
-            return os.listdir(self.base)
         fs, p = self._fs_and_path(self.base)
         if not fs.exists(p):
             return []
         return [st.getPath().getName() for st in fs.listStatus(p)]
+
+    def delete(self, name: str) -> None:
+        """Remove the entry `name` under base (a file or a whole tree)."""
+        fs, p = self._fs_and_path(f"{self.base.rstrip('/')}/{name}")
+        fs.delete(p, True)
+
+    def parquet_part_rows(self, path: str) -> dict[int, int]:
+        """Rows per write task of the parquet dir `path`, from the part
+        files' footers (driver-side, no Spark job). Task i wrote
+        ``part-<i>-...``; a task's several files are summed."""
+        parquet = self.spark._jvm.org.apache.parquet.hadoop
+        conf = self.spark._jsc.hadoopConfiguration()
+        fs, p = self._fs_and_path(path)
+        rows: dict[int, int] = {}
+        for st in fs.listStatus(p):
+            name = st.getPath().getName()
+            if name.startswith("part-"):
+                task = int(name.split("-")[1])
+                reader = parquet.ParquetFileReader.open(
+                    parquet.util.HadoopInputFile.fromStatus(st, conf)
+                )
+                try:
+                    rows[task] = rows.get(task, 0) + int(reader.getRecordCount())
+                finally:
+                    reader.close()
+        return rows
 
 
 class PregelComputation:
@@ -256,7 +270,6 @@ class PregelRunner:
     spark: SparkSession
     max_iterations: int = 20
     checkpoint_dir: str | None = None
-    checkpoint_every: int = 1
     salt_buckets: int = 0  # >1 enables the explicit two-phase salted reduce
     #: degree-based hub edge splitting (Graph.pregel_layout): srcs
     #: whose out-degree exceeds the threshold have their edges
@@ -283,8 +296,8 @@ class PregelRunner:
     #: fixed-iteration runs (tolerance 0, no vote-to-halt early exit
     #: possible) don't need it. Metrics then record active = rows =
     #: -1. When True the counts ride the SAME job that materializes
-    #: the new state (an Observation on the eager localCheckpoint /
-    #: checkpoint write), not a second pass over the state.
+    #: the new state (an Observation on the eager localCheckpoint),
+    #: not a second pass over the state.
     track_active: bool = True
 
     # -- checkpoint store ------------------------------------------------
@@ -296,49 +309,33 @@ class PregelRunner:
         assert self.checkpoint_dir
         return f"{self.checkpoint_dir.rstrip('/')}/superstep={superstep:05d}"
 
-    def _write_checkpoint(self, state: DataFrame, superstep: int, meta: dict) -> DataFrame:
-        """Snapshot state + lineage manifest; return the re-read state.
-
-        The manifest carries per-partition row counts plus iteration
-        metrics — the lineage record the north_rule requires; a resume
-        validates against it. Writing parquet and reading it back also
-        truncates the logical plan (constant-size plans across
-        supersteps).
-        """
+    def _write_checkpoint(self, state: DataFrame, superstep: int) -> None:
+        """Snapshot the localCheckpointed `state` (one shuffle-free job:
+        write task i is state partition i) and seal it with the lineage
+        manifest the north_rule requires: rows per state partition, read
+        from the parquet footers rather than by a second scan."""
         path = self._ckpt_path(superstep)
         state.write.mode("overwrite").parquet(f"{path}/state")
-        reread = self.spark.read.parquet(f"{path}/state")
-        part_counts = [
-            {"partition": int(r["p"]), "rows": int(r["n"])}
-            for r in reread.groupBy(F.spark_partition_id().alias("p"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        ]
+        store = self._store()
+        part_rows = store.parquet_part_rows(f"{path}/state")
         manifest = {
             "superstep": superstep,
-            "partitions": part_counts,
-            "rows": sum(p["rows"] for p in part_counts),
-            **meta,
+            "partitions": [{"partition": p, "rows": n} for p, n in sorted(part_rows.items())],
+            "rows": sum(part_rows.values()),
+            "iteration": superstep,
         }
-        self._store().write_text(f"{path}/manifest.json", json.dumps(manifest))
-        return reread
+        store.write_text(f"{path}/manifest.json", json.dumps(manifest))
 
     def latest_checkpoint(self) -> int | None:
         """Highest superstep with a complete (manifest-sealed) snapshot."""
         if not self.checkpoint_dir:
             return None
         store = self._store()
-        best = None
-        for name in store.list_names():
-            if name.startswith("superstep=") and store.exists(
-                f"{self._ckpt_path(int(name.split('=')[1]))}/manifest.json"
-            ):
-                k = int(name.split("=")[1])
-                best = k if best is None else max(best, k)
-        return best
-
-    def _load_checkpoint(self, superstep: int) -> DataFrame:
-        return self.spark.read.parquet(f"{self._ckpt_path(superstep)}/state")
+        steps = [int(n.split("=")[1]) for n in store.list_names() if n.startswith("superstep=")]
+        return max(
+            (k for k in steps if store.exists(f"{self._ckpt_path(k)}/manifest.json")),
+            default=None,
+        )
 
     # -- message reduction ------------------------------------------------
     def _queue_reduce(self, messages: DataFrame, queue_size: int) -> DataFrame:
@@ -476,14 +473,18 @@ class PregelRunner:
         metrics: list[dict] = []
 
         start_iter = 0
-        if resume:
-            last = self.latest_checkpoint()
-            if last is not None:
-                state = self._load_checkpoint(last)
-                start_iter = last + 1
-            else:
-                state = computation.init(graph)
+        last = self.latest_checkpoint() if resume else None
+        if last is not None:
+            state = self.spark.read.parquet(f"{self._ckpt_path(last)}/state")
+            start_iter = last + 1
         else:
+            if self.checkpoint_dir:
+                # a fresh run: drop the snapshots and metrics log an
+                # earlier run left, or a later resume could pick them up
+                store = self._store()
+                for name in store.list_names():
+                    if name.startswith("superstep=") or name in ("metrics.jsonl", "metrics"):
+                        store.delete(name)
             state = computation.init(graph)
         state = state.repartition(n_parts, "id")
 
@@ -517,9 +518,9 @@ class PregelRunner:
             )
 
             # convergence counters ride the materialization job below
-            # (CollectMetrics fires when the eager localCheckpoint /
-            # checkpoint write scans the plan) — zero extra jobs, vs
-            # a full second pass over the state per superstep
+            # (CollectMetrics fires when the eager localCheckpoint
+            # scans the plan) — zero extra jobs, vs a full second pass
+            # over the state per superstep
             obs = None
             if self.track_active:
                 obs = Observation()
@@ -529,16 +530,9 @@ class PregelRunner:
                     F.sum(F.when(~F.col("_halted"), 1).otherwise(0)).alias("active"),
                 )
 
-            meta = {"iteration": iteration}
-            if self.checkpoint_dir and (iteration % self.checkpoint_every == 0):
-                # parquet round-trip drops the hash partitioning —
-                # restore it so the next superstep stays exchange-free
-                new_state = self._write_checkpoint(new_state, iteration, meta)
-                new_state = new_state.repartition(n_parts, "id").localCheckpoint(
-                    eager=True
-                )
-            else:
-                new_state = new_state.localCheckpoint(eager=True)
+            new_state = new_state.localCheckpoint(eager=True)
+            if self.checkpoint_dir:
+                self._write_checkpoint(new_state, iteration)
             # free the PREVIOUS superstep's localCheckpoint blocks now
             # (the new state is fully materialized): without this the
             # per-superstep snapshots pile up in the block manager and

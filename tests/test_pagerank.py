@@ -240,19 +240,22 @@ class _FailsAtSecondSuperstep(PregelComputation):
         return state.join(inbox, "id", "left").select("id", F.lit(False).alias("_halted"))
 
 
-def test_pregel_superstep_is_one_job_and_conf_restored(spark, catalog):
+def test_pregel_superstep_is_one_job_and_conf_restored(spark, catalog, tmp_path):
     """With AQE and auto-broadcast off inside the loop, a superstep on a
-    hub-free graph is the one job that materializes its state; the
-    session's settings come back after the run, also when it raises."""
+    hub-free graph is the one job that materializes its state, plus the
+    snapshot write when checkpointing; the session's settings come back
+    after the run, also when it raises."""
     sc = spark.sparkContext
     session_conf = {k: spark.conf.get(k) for k in _LOOP_CONF}
+    pr_cfg = PageRankConfig(max_iterations=9, tolerance=0.0)
     runs = (
-        ("pr", PAGERANK_EDGES,
-         lambda g: pagerank(spark, g, PageRankConfig(max_iterations=9, tolerance=0.0))),
-        ("wcc", [(i, i + 1) for i in range(40)] + WCC_EDGES,
+        ("pr", PAGERANK_EDGES, 1, lambda g: pagerank(spark, g, pr_cfg)),
+        ("wcc", [(i, i + 1) for i in range(40)] + WCC_EDGES, 1,
          lambda g: wcc(spark, g)),
+        ("pr_ckpt", PAGERANK_EDGES, 2,
+         lambda g: pagerank(spark, g, pr_cfg, checkpoint_dir=str(tmp_path / "ckpt"))),
     )
-    for name, edges, algo in runs:
+    for name, edges, jobs_per_superstep, algo in runs:
         group = f"pregel_jobs_{name}"
         sc.setJobGroup(group, group)
         try:
@@ -262,7 +265,9 @@ def test_pregel_superstep_is_one_job_and_conf_restored(spark, catalog):
         k = len(res.metrics)
         assert k >= 5, name
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert jobs <= k + _SETUP_JOBS, f"{name}: {jobs} jobs for {k} supersteps"
+        assert jobs <= jobs_per_superstep * k + _SETUP_JOBS, (
+            f"{name}: {jobs} jobs for {k} supersteps"
+        )
         assert {c: spark.conf.get(c) for c in _LOOP_CONF} == session_conf
 
     comp = _FailsAtSecondSuperstep()
