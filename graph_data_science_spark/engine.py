@@ -22,7 +22,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.catalog import Graph, GraphCatalog
@@ -89,12 +89,22 @@ class ProcResult:
 
     def write(self, path: str, fmt: str = "parquet", mode: str = "overwrite") -> dict:
         """Persist the result — the .write mode (targets a table path
-        instead of Neo4j; Iceberg `writeTo` when the catalog has it)."""
+        instead of Neo4j). ``rows`` counts the rows at `path` after the
+        write."""
         df, meta = self._run()
-        df.write.mode(mode).format(fmt).save(path)
-        # count the re-read output, not the lazy result DF — counting
-        # df would recompute the whole algorithm a second time
-        rows = df.sparkSession.read.format(fmt).load(path).count()
+        if mode.lower() in ("append", "ignore"):
+            # `path` may hold rows this write did not write: count the
+            # re-read output (counting the lazy df would recompute the
+            # whole algorithm a second time)
+            df.write.mode(mode).format(fmt).save(path)
+            rows = df.sparkSession.read.format(fmt).load(path).count()
+        else:
+            # `path` holds exactly the written rows: count them on the
+            # write job itself, not by re-reading the output (more jobs)
+            obs = Observation()
+            counted = df.observe(obs, F.count(F.lit(1)).alias("n"))
+            counted.write.mode(mode).format(fmt).save(path)
+            rows = obs.get["n"]
         return {"path": path, "rows": rows, **meta}
 
     # -- estimation -------------------------------------------------------

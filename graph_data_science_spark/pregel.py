@@ -26,7 +26,11 @@ Spark realization — each superstep is one Catalyst-planned job:
   send (the frontier), halted vertices reactivate when a message
   arrives — delta iteration for free.
 * Lineage: each superstep's eager localCheckpoint cuts the plan (O(1)
-  across supersteps) and keeps the state's hash partitioning.
+  across supersteps) and keeps the state's hash partitioning. The cut
+  is util.local_checkpoint, which also drops the Catalyst size
+  estimate the checkpoint would otherwise carry into the next
+  superstep's joins; that estimate, not the lineage, compounded every
+  superstep and made long loops slow on the driver.
 * Checkpoint/resume (north_rule hard requirement): that materialized
   state is also snapshotted to the checkpoint store (parquet plus a
   JSON lineage manifest, see PregelRunner._write_checkpoint). A fresh
@@ -46,6 +50,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.catalog import Graph
+from graph_data_science_spark.util import local_checkpoint
 
 
 def _free_local_checkpoint(df: DataFrame) -> None:
@@ -530,7 +535,7 @@ class PregelRunner:
                     F.sum(F.when(~F.col("_halted"), 1).otherwise(0)).alias("active"),
                 )
 
-            new_state = new_state.localCheckpoint(eager=True)
+            new_state = local_checkpoint(new_state)
             if self.checkpoint_dir:
                 self._write_checkpoint(new_state, iteration)
             # free the PREVIOUS superstep's localCheckpoint blocks now

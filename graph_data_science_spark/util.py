@@ -1,14 +1,27 @@
-"""Shared utilities: hard plan truncation for long iterative loops.
+"""Shared utilities: lineage cuts for long iterative loops.
 
-Empirical Spark 4.1 local-mode finding (first hit in Louvain, then
-KNN): a chain of ~12+ `localCheckpoint` generations makes each
-subsequent materialization drastically slower — constant logical
-plan, constant rows, growing wall time — while a parquet round-trip
-keeps per-iteration cost flat indefinitely. Algorithms whose driver
-loops can exceed ~10 iterations therefore truncate through a
-`Truncator`: every `cut()` writes the DF to a scratch parquet dir and
-reads it back (a few hundred ms for superstep-sized state, and the
-same device the Pregel runner already uses for durable checkpoints).
+A `localCheckpoint` cuts the RDD lineage, but its `LogicalRDD` keeps
+the input plan's Catalyst size estimate (`originStats`). Without CBO,
+Spark estimates a join's size as the product of its inputs' sizes, so
+a loop that joins last generation's checkpoint into the next one
+multiplies the estimate into itself every generation: the plan and the
+rows stay constant while the driver spends more and more time in
+`SizeInBytesOnlyStatsPlanVisitor` big-integer multiplication. Measured
+(Spark 4.1, local[4]) as the state's `sizeInBytes` bit length: label
+propagation 20 -> 56 -> 271 -> 1 133 -> 4 582 bits over its first
+iterations (x4 each: millions of bits by the tenth, which took 3 s,
+and an eleventh took 17-20 s, against 0.7 s early on); WCC doubling
+per superstep once its shortcut join starts (73 bits at superstep 4,
+6 811 at 10); PageRank about +16 bits per superstep. The lineage
+itself stays two lines long. `local_checkpoint` is the cut that does
+not carry such an estimate forward.
+
+A parquet round trip resets the estimate too (a file scan is sized by
+its files). A `Truncator` cuts through parquet every `every`-th call
+and through `local_checkpoint` otherwise; `cut()` writes the DF to a
+scratch parquet dir and reads it back (a few hundred ms for
+superstep-sized state, and the same device the Pregel runner already
+uses for durable checkpoints).
 
 Use as a context manager so the scratch space is removed once the
 caller has materialized its final result:
@@ -29,6 +42,50 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+#: Spark sizes are Longs; an estimate past this is an overflowed
+#: product of inputs' estimates and carries no information
+_MAX_SIZE_IN_BYTES = (1 << 63) - 1
+
+
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """`df.localCheckpoint(eager=True)` without the compounded size
+    estimate (see the module docstring).
+
+    An estimate past a Long is dropped: the `LogicalRDD` is rebuilt
+    with no `originStats`/`originConstraints` (same RDD, output
+    partitioning and ordering), so Spark sizes it at
+    `spark.sql.defaultSizeInBytes`, its usual unknown size for an RDD.
+    A smaller estimate is kept, so no plan choice (broadcast or not)
+    changes. Best-effort: on any reflection mismatch with this Spark
+    the plain checkpoint is returned."""
+    out = df.localCheckpoint(eager=True)
+    try:
+        plan = out._jdf.logicalPlan()
+        try:
+            if plan.stats().sizeInBytes() <= _MAX_SIZE_IN_BYTES:
+                return out
+        except ValueError:  # more digits than Python converts: huge
+            pass
+        spark = out.sparkSession
+        none = spark._jvm.scala.Option.empty()
+        bare = plan.copy(
+            plan.output(),
+            plan.rdd(),
+            plan.outputPartitioning(),
+            plan.outputOrdering(),
+            plan.isStreaming(),
+            plan.stream(),
+            spark._jsparkSession,
+            none,
+            none,
+        )
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, bare
+        )
+        return type(out)(jdf, spark)
+    except Exception:
+        return out
+
 
 class Truncator:
     def __init__(self, spark: SparkSession, every: int = 1):
@@ -38,11 +95,11 @@ class Truncator:
         self._n = 0
 
     def cut(self, df: DataFrame) -> DataFrame:
-        """Hard-truncate the plan via parquet; cheap localCheckpoint
+        """Hard-truncate the plan via parquet; cheap local_checkpoint
         on the off-cycles when `every` > 1."""
         self._n += 1
         if self._n % self.every:
-            return df.localCheckpoint(eager=True)
+            return local_checkpoint(df)
         path = os.path.join(self._dir, f"t{self._n}_{uuid.uuid4().hex[:6]}")
         df.write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)

@@ -4,7 +4,7 @@ import pytest
 
 from graph_data_science_spark.algorithms.randomwalk import random_walks
 from graph_data_science_spark.catalog import Graph
-from graph_data_science_spark.engine import GdsEngine
+from graph_data_science_spark.engine import GdsEngine, ProcResult
 from graph_data_science_spark.generator import generate_graph
 from graph_data_science_spark.graph_ops import degree_distribution, density, graph_info
 from tests.conftest import PAGERANK_EDGES, PAGERANK_EXPECTED, edge_df
@@ -50,6 +50,26 @@ def test_write_mode(spark, gds, tmp_path):
     assert out["rows"] == 11
     back = spark.read.parquet(str(tmp_path / "deg"))
     assert back.count() == 11
+
+
+def test_write_mode_is_one_job(spark, gds, tmp_path):
+    """Writing a materialized result is the write job alone: the rows
+    are counted on it, not by re-reading the output. Appending counts
+    every row at the path, as before."""
+    sc = spark.sparkContext
+    g = gds.graph.create("eg_write", edge_df(spark, PAGERANK_EDGES))
+    state = spark.range(37).repartition(3, "id").localCheckpoint(eager=True)
+    proc = ProcResult(graph=g, _compute=lambda: (state, {"k": 1}), value_column="id")
+    path = str(tmp_path / "out")
+    sc.setJobGroup("engine_write", "engine_write")
+    try:
+        out = proc.write(path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out == {"path": path, "rows": 37, "k": 1}
+    assert len(sc.statusTracker().getJobIdsForGroup("engine_write")) == 1
+    assert spark.read.parquet(path).count() == 37
+    assert proc.write(path, mode="append")["rows"] == 74
 
 
 def test_estimate(spark, gds):

@@ -6,11 +6,25 @@ engine is synchronous, so parity is asserted at CONVERGENCE
 order-dependent intermediate iterations.
 """
 
+import math
+
+from pyspark.sql import functions as F
+
 from graph_data_science_spark.algorithms.labelprop import (
     LabelPropagationConfig,
     label_propagation,
 )
-from tests.conftest import LP_EDGES, LP_PARTITION, LP_SEEDS, edge_df, persistent_rdd_ids
+from graph_data_science_spark.algorithms.pagerank import PageRankConfig, pagerank
+from graph_data_science_spark.algorithms.wcc import wcc
+from tests.conftest import (
+    LP_EDGES,
+    LP_PARTITION,
+    LP_SEEDS,
+    PAGERANK_EDGES,
+    WCC_EDGES,
+    edge_df,
+    persistent_rdd_ids,
+)
 
 
 def _partition_of(labels: dict) -> list[set]:
@@ -128,3 +142,58 @@ def test_labelprop_frees_sub_round_blocks(spark, catalog):
     res = label_propagation(spark, g, LabelPropagationConfig(max_iterations=6))
     assert res.ran_iterations == 6 and not res.did_converge
     assert len(persistent_rdd_ids(spark) - before) == 1  # the result state
+
+
+def _size_estimate_bits(df) -> float:
+    """Bit length of Catalyst's size estimate for `df`."""
+    try:
+        return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().bit_length()
+    except ValueError:  # too many digits for Python to convert
+        return math.inf
+
+
+def test_loop_states_keep_bounded_size_estimates(spark, catalog):
+    """A superstep's cut must not carry its inputs' size estimate into
+    the next superstep: joins multiply estimates, so label propagation
+    would grow ~x4 in bits per iteration and WCC double per superstep,
+    the driver paying for the big-integer arithmetic."""
+    path = catalog.create("lp_est", edge_df(spark, [(i, i + 1) for i in range(40)]))
+    lp = label_propagation(spark, path, LabelPropagationConfig(max_iterations=8))
+    assert lp.ran_iterations == 8 and not lp.did_converge
+    pr = pagerank(
+        spark,
+        catalog.create("pr_est", edge_df(spark, PAGERANK_EDGES)),
+        PageRankConfig(max_iterations=20, tolerance=0.0),
+    )
+    cc = wcc(
+        spark,
+        catalog.create("wcc_est", edge_df(spark, [(i, i + 1) for i in range(40)] + WCC_EDGES)),
+    )
+    for name, res in (("labelprop", lp), ("pagerank", pr), ("wcc", cc)):
+        assert _size_estimate_bits(res.state) <= 64, name
+
+
+def test_local_checkpoint_drops_only_overflowed_estimates(spark):
+    """A real estimate survives the cut, so broadcast choices do not
+    change; a compounded one is dropped, and the cut keeps its rows and
+    hash partitioning."""
+    from graph_data_science_spark.util import local_checkpoint
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # AQE hides the partitioning
+    try:
+        small = local_checkpoint(spark.range(50).repartition(3, "id"))
+        assert _size_estimate_bits(small) < 20
+        big = small
+        for _ in range(4):  # each self-join squares the estimate
+            big = big.join(big.select(F.col("id").alias("o")), F.col("id") == F.col("o"))
+            big = big.select("id").repartition(3, "id")
+        assert _size_estimate_bits(big.localCheckpoint()) > 64
+        cut = local_checkpoint(big)
+        assert _size_estimate_bits(cut) <= 64
+        assert cut.count() == 50
+        parts = cut._jdf.logicalPlan().outputPartitioning()
+        assert parts.toString().startswith("hashpartitioning(id")
+        assert parts.numPartitions() == 3
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
