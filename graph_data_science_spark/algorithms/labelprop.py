@@ -55,17 +55,6 @@ class LabelPropagationConfig:
     node_weight_column: str | None = None
     weighted: bool = False  # use edge weights
     blocks: int = 2  # 2 = block Gauss-Seidel (even ids then odd), 1 = Jacobi
-    #: opt-in CHUNK-ORDERED Gauss-Seidel matching the reference's
-    #: in-place batch sweep (ComputeStep.java:82-92: vertices update
-    #: in id order within a batch, each reading every earlier update):
-    #: > 1 partitions the id space into that many contiguous-rank
-    #: chunks, updated SEQUENTIALLY within one iteration, each chunk
-    #: re-gathering against all earlier chunks' NEW labels. Costs one
-    #: vote join per chunk per iteration — a parity-study mode for
-    #: iteration-bounded comparisons against the reference, not the
-    #: default (convergence fixtures agree across all modes; mid-run
-    #: states legitimately differ, see tests). Overrides ``blocks``.
-    chunk_ordered: int = 0
 
 
 class _LabelPropComputation(PregelComputation):
@@ -76,7 +65,7 @@ class _LabelPropComputation(PregelComputation):
         self.cfg = cfg
         self.node_props = node_props
         self._edges: DataFrame | None = None  # captured for the odd half-step
-        #: this iteration's lazily checkpointed sub-rounds (_adopt)
+        #: this iteration's lazily checkpointed even half-step (step)
         self._sub_rounds: list[DataFrame] = []
 
     def init(self, graph: Graph) -> DataFrame:
@@ -102,24 +91,10 @@ class _LabelPropComputation(PregelComputation):
             )
         else:
             label = F.col("id")
-        out = verts.select(
+        return verts.select(
             "id", label.alias("label"), nw.alias("node_weight"),
             F.lit(False).alias("_halted"),
         )
-        if self.cfg.chunk_ordered > 1:
-            from graph_data_science_spark.util import global_rank
-
-            c = self.cfg.chunk_ordered
-            n = out.count()
-            ranked = global_rank(out.select("id"), ["id"], rank_col="_r")
-            chunks = ranked.select(
-                "id",
-                F.floor((F.col("_r") - 1) * c / F.lit(max(n, 1)))
-                .cast("int")
-                .alias("_chunk"),
-            )
-            out = out.join(chunks, "id")
-        return out
 
     def _votes(self, state: DataFrame, edges: DataFrame) -> DataFrame:
         """Winning label per gathering vertex (dst, msg) — argmax of
@@ -155,8 +130,6 @@ class _LabelPropComputation(PregelComputation):
         return messages  # argmax already applied in _votes
 
     def step(self, state: DataFrame, inbox: DataFrame, iteration: int) -> DataFrame:
-        if self.cfg.chunk_ordered > 1:
-            return self._chunk_ordered_step(state, inbox)
         if self.cfg.blocks <= 1:
             # one flat select — withColumn chains re-analyze the plan
             # per call, a per-superstep driver cost the loop repeats
@@ -167,9 +140,23 @@ class _LabelPropComputation(PregelComputation):
                 "node_weight",
                 (new == F.col("label")).alias("_halted"),
             )
-        # block Gauss-Seidel: evens adopt phase-1 winners...
+        # block Gauss-Seidel: evens adopt phase-1 winners in one flat
+        # select (`_old` keeps the input label for the halt vote),
+        # lazily localCheckpointed so the odd half re-gathers against
+        # it without re-deriving it; free_sub_rounds releases its
+        # blocks once the runner has materialized the iteration...
         parity = F.pmod(F.col("id"), F.lit(2))
-        half1 = self._adopt(state, inbox, "id", parity == 0, F.col("label").alias("_old"))
+        half1 = (
+            state.join(inbox, "id", "left")
+            .select(
+                "id",
+                _relabel(parity == 0).alias("label"),
+                "node_weight",
+                F.col("label").alias("_old"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        self._sub_rounds.append(half1)
         # ...then odds re-gather against the evens' NEW labels
         inbox2 = self._votes(half1, self._edges)
         new = _relabel(parity == 1)
@@ -180,52 +167,10 @@ class _LabelPropComputation(PregelComputation):
             (new == F.col("_old")).alias("_halted"),
         )
 
-    def _adopt(
-        self,
-        state: DataFrame,
-        inbox: DataFrame,
-        on: str | Column,
-        chosen: Column,
-        *keep: str | Column,
-    ) -> DataFrame:
-        """One Gauss-Seidel sub-round as one flat select: the vertices
-        where ``chosen`` holds adopt their inbox winner. The result is
-        lazily localCheckpointed so later sub-rounds re-gather against
-        it without re-deriving it; ``free_sub_rounds`` releases its
-        blocks once the runner has materialized the iteration."""
-        out = (
-            state.join(inbox, on, "left")
-            .select("id", _relabel(chosen).alias("label"), "node_weight", *keep)
-            .localCheckpoint(eager=False)
-        )
-        self._sub_rounds.append(out)
-        return out
-
     def free_sub_rounds(self) -> None:
         for df in self._sub_rounds:
             _free_local_checkpoint(df)
         self._sub_rounds = []
-
-    def _chunk_ordered_step(self, state: DataFrame, inbox: DataFrame) -> DataFrame:
-        """One reference-batch-semantics iteration: chunk 0 adopts the
-        phase-0 winners (computed against last iteration's labels);
-        every later chunk re-gathers against the state INCLUDING all
-        earlier chunks' new labels — the distributed, deterministic
-        analog of the in-place id-ordered sweep."""
-        chunk = F.col("_chunk")
-        cur = self._adopt(
-            state, inbox, "id", chunk == 0, "_chunk", F.col("label").alias("_old")
-        )
-        for c in range(1, self.cfg.chunk_ordered):
-            votes = self._votes(cur, self._edges)
-            cur = self._adopt(cur, votes, cur.id == votes.dst, chunk == c, "_chunk", "_old")
-        return cur.select(
-            "id",
-            "label",
-            "node_weight",
-            (F.col("label") == F.col("_old")).alias("_halted"),
-            "_chunk",
-        )
 
 
 def _relabel(chosen: Column) -> Column:

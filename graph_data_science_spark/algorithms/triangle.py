@@ -52,22 +52,25 @@ def _simple_edges(graph: Graph) -> DataFrame:
     return projection.canonical_undirected(graph.edges)
 
 
+def _simple_degrees(edges: DataFrame) -> DataFrame:
+    """(id, degree): undirected simple degree over `_simple_edges`."""
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
+
+
 def triangle_count(
     spark: SparkSession,
     graph: Graph,
     max_degree: int | None = None,
-    degree_ordering: bool = True,
 ) -> TriangleCountResult:
     edges = _simple_edges(graph).persist()
     deg = fwd = None
     try:
-        # undirected simple degree per vertex
-        deg = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        ).persist()
+        deg = _simple_degrees(edges).persist()
 
         excluded = None
         kept = edges
@@ -79,32 +82,22 @@ def triangle_count(
                 .select("src", "dst")
             )
 
-        if degree_ordering:
-            # orient each edge low-(degree,id) -> high-(degree,id):
-            # wedge fan-out per vertex bounded by its forward degree
-            d1 = deg.select(F.col("id").alias("src"), F.col("degree").alias("_ds"))
-            d2 = deg.select(F.col("id").alias("dst"), F.col("degree").alias("_dd"))
-            ranked = kept.join(d1, "src").join(d2, "dst")
-            fwd = ranked.select(
-                F.when(
-                    (F.col("_ds") < F.col("_dd"))
-                    | ((F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst"))),
-                    F.col("src"),
-                )
-                .otherwise(F.col("dst"))
-                .alias("u"),
-                F.when(
-                    (F.col("_ds") < F.col("_dd"))
-                    | ((F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst"))),
-                    F.col("dst"),
-                )
-                .otherwise(F.col("src"))
-                .alias("v"),
+        # orient each edge low-(degree,id) -> high-(degree,id):
+        # wedge fan-out per vertex bounded by its forward degree
+        d1 = deg.select(F.col("id").alias("src"), F.col("degree").alias("_ds"))
+        d2 = deg.select(F.col("id").alias("dst"), F.col("degree").alias("_dd"))
+        src_low = (F.col("_ds") < F.col("_dd")) | (
+            (F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst"))
+        )
+        fwd = (
+            kept.join(d1, "src")
+            .join(d2, "dst")
+            .select(
+                F.when(src_low, F.col("src")).otherwise(F.col("dst")).alias("u"),
+                F.when(src_low, F.col("dst")).otherwise(F.col("src")).alias("v"),
             )
-        else:
-            fwd = kept.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-
-        fwd = fwd.persist()
+            .persist()
+        )
         e1 = fwd.select(F.col("u").alias("a"), F.col("v").alias("b"))
         e2 = fwd.select(F.col("u").alias("b2"), F.col("v").alias("c"))
         # wedges centered at the forward-orientation source: a->b, a->c
@@ -185,12 +178,7 @@ def triangles(
     """
     edges = _simple_edges(graph)
     if max_degree is not None:
-        deg = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
+        deg = _simple_degrees(edges)
         hot = deg.where(F.col("degree") > max_degree).select("id")
         edges = edges.join(
             hot.withColumnRenamed("id", "src"), "src", "left_anti"
@@ -219,12 +207,7 @@ def local_clustering_coefficient(
     """
     tr = triangle_result or triangle_count(spark, graph, max_degree=max_degree)
     edges = _simple_edges(graph)
-    deg = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = _simple_degrees(edges)
     joined = tr.local_counts.join(deg, "id", "left").select(
         "id",
         F.col("triangles"),

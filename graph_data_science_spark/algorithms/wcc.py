@@ -14,11 +14,11 @@ Options mirrored from WccBaseConfig.java:29-47 / Wcc.java:109-142,
 edges with weight > threshold), `consecutive_ids` relabeling.
 
 Scale: plain min-propagation needs O(diameter) supersteps. Each
-round also propagates labels through the *current label graph*
-(a pointer-doubling style shortcut: a vertex additionally learns the
-component label of its current label-vertex), which contracts long
-paths in O(log n) rounds — the DataFrame analog of path halving
-(HugeAtomicDisjointSetStruct.java:113-130).
+round from superstep 4 on also propagates labels through the
+*current label graph* (a pointer-doubling style shortcut: a vertex
+additionally learns the component label of its current label-vertex),
+which contracts long paths in O(log n) rounds — the DataFrame analog
+of path halving (HugeAtomicDisjointSetStruct.java:113-130).
 """
 
 from __future__ import annotations
@@ -39,25 +39,21 @@ class WccConfig:
     seed_column: str | None = None  # node property holding seed component ids
     consecutive_ids: bool = False
     max_iterations: int = 100
-    path_doubling: bool = True
-    #: first superstep that ALSO runs the label-of-label shortcut
-    #: join. Short-diameter graphs (the common case: the sf0.1 event
-    #: graph converges in 4-5 plain rounds) never reach it and save
-    #: the shortcut's extra join per superstep (measured 6.2 s ->
-    #: 4.2 s warm on the headline graph); long-chain graphs start
-    #: doubling here and still converge in
-    #: doubling_from_iteration + O(log n) rounds instead of
-    #: O(diameter). The fixpoint is identical either way.
-    doubling_from_iteration: int = 4
-    #: shortcut applications per doubling superstep (label-graph
-    #: depth contracts 2^k per round). Graph-shape dependent,
-    #: measured both ways: a pure 50k chain converges 19 -> 12
-    #: rounds and 2x faster at k=2, but the hub-heavy transcript
-    #: scaling table shows IDENTICAL per-round active decay at k=2
-    #: (the limiter there is per-edge message propagation, not label
-    #: chain depth) while every doubling round costs ~2x — so the
-    #: default stays 1; raise it only for long-path graphs
-    shortcut_applications: int = 1
+
+
+#: first superstep that ALSO runs the label-of-label shortcut join,
+#: once per superstep. Short-diameter graphs (the common case: the
+#: sf0.1 event graph converges in 4-5 plain rounds) never reach it and
+#: save the shortcut's extra join per superstep (measured 6.2 s ->
+#: 4.2 s warm on the headline graph); long-chain graphs start doubling
+#: here and still converge in _DOUBLING_FROM + O(log n) rounds instead
+#: of O(diameter). One application per superstep: a second one cut a
+#: pure 50k chain from 19 to 12 rounds, but the hub-heavy transcript
+#: scaling table showed IDENTICAL per-round active decay with two
+#: (the limiter there is per-edge message propagation, not label-chain
+#: depth) while every doubling round cost ~2x. The fixpoint is
+#: identical either way.
+_DOUBLING_FROM = 4
 
 
 class _WccComputation(PregelComputation):
@@ -92,25 +88,17 @@ class _WccComputation(PregelComputation):
                 F.col("component"), F.coalesce(F.col("msg"), F.col("component"))
             ).alias("_new"),
         )
-        if self.cfg.path_doubling and iteration >= self.cfg.doubling_from_iteration:
-            # pointer-doubling shortcut, applied `shortcut_applications`
-            # times per superstep: each application halves the label-
-            # graph depth, so k applications contract depth 2^k per
-            # round — on long-chain graphs total rounds drop from
-            # ~log2(depth) to ~log2(depth)/k while each tail round
-            # (whose cost is the full-state join, not the tiny
-            # frontier) stays the same order
-            for _ in range(max(1, self.cfg.shortcut_applications)):
-                labels = st.select(
-                    F.col("id").alias("_lid"), F.col("_new").alias("_llabel")
-                )
-                st = st.join(labels, st._new == labels._lid, "left").select(
-                    "id",
-                    "component",
-                    F.least(
-                        F.col("_new"), F.coalesce(F.col("_llabel"), F.col("_new"))
-                    ).alias("_new"),
-                )
+        if iteration >= _DOUBLING_FROM:
+            # pointer-doubling shortcut: a vertex also learns the label
+            # of its current label-vertex, halving the label-graph depth
+            labels = st.select(F.col("id").alias("_lid"), F.col("_new").alias("_llabel"))
+            st = st.join(labels, st._new == labels._lid, "left").select(
+                "id",
+                "component",
+                F.least(
+                    F.col("_new"), F.coalesce(F.col("_llabel"), F.col("_new"))
+                ).alias("_new"),
+            )
         return st.select(
             "id",
             F.col("_new").alias("component"),

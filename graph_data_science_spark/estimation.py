@@ -160,13 +160,13 @@ def node_similarity(n: int, m: int, **cfg) -> MemoryEstimation:
     # exact count (algorithms.similarity.estimate_candidate_pairs, one
     # aggregate over the edge table), size the term exactly; otherwise
     # fall back to the 4x|E| heuristic of a hub-free graph
-    pairs = int(cfg.get("candidate_pairs", 0))
-    pair_label = (
-        "pair shuffle (exact co-neighbor count)"
-        if pairs > 0
-        else "pair shuffle (co-neighbor join, hub-free heuristic)"
-    )
-    pair_bytes = pairs * _row(3) if pairs > 0 else m * _row(3) * 4
+    pairs = cfg.get("candidate_pairs")
+    if pairs is None:
+        pair_label = "pair shuffle (co-neighbor join, hub-free heuristic)"
+        pair_bytes = m * _row(3) * 4
+    else:
+        pair_label = "pair shuffle (exact co-neighbor count)"
+        pair_bytes = int(pairs) * _row(3)
     return MemoryEstimation("node_similarity", 0, [
         MemoryEstimation("neighbor table (cached)", m * _row(2)),
         MemoryEstimation(pair_label, pair_bytes),

@@ -121,6 +121,11 @@ def list_progress() -> list[dict]:
     return [dict(_TASK_REGISTRY[k]) for k in sorted(_TASK_REGISTRY, reverse=True)]
 
 
+#: PregelRunner's partition auto-sizing target (edges per partition);
+#: tuned so a partition is a few MB of edge rows — far under executor
+#: memory, large enough that task overhead amortizes
+_EDGES_PER_PARTITION = 100_000
+
 _REDUCERS: dict[str, Callable[[str], Column]] = {
     "sum": F.sum,
     "min": F.min,
@@ -284,7 +289,7 @@ class PregelRunner:
     #: to computations with ``send_is_linear``.
     hub_split_threshold: int | None = None
     #: partitions for the edge/state co-partitioning; None = auto:
-    #: ceil(|E| / edges_per_partition) clamped to [1, session
+    #: ceil(|E| / _EDGES_PER_PARTITION) clamped to [1, session
     #: spark.sql.shuffle.partitions]. Auto-sizing only ever SHRINKS
     #: below the session setting — on a real cluster whose
     #: shuffle.partitions is sized to the executors a 100-TB graph
@@ -293,10 +298,6 @@ class PregelRunner:
     #: (measured: WCC at 200k edges, 32 -> 8 partitions = 1.4x warm,
     #: 2.8x cold). Set explicitly to pin a count.
     partitions: int | None = None
-    #: auto-sizing target (edges per partition); tuned so a partition
-    #: is a few MB of edge rows — far under executor memory, large
-    #: enough that task overhead amortizes
-    edges_per_partition: int = 100_000
     #: False skips the per-superstep active/row count entirely —
     #: fixed-iteration runs (tolerance 0, no vote-to-halt early exit
     #: possible) don't need it. Metrics then record active = rows =
@@ -423,9 +424,7 @@ class PregelRunner:
             n_parts = self.partitions
         else:
             n_edges = graph.edge_count()
-            n_parts = max(
-                1, min(session_parts, -(-n_edges // self.edges_per_partition))
-            )
+            n_parts = max(1, min(session_parts, -(-n_edges // _EDGES_PER_PARTITION)))
         # pin the session shuffle width to the loop's partition count:
         # the message-delivery groupBy(dst) exchange follows
         # spark.sql.shuffle.partitions, and a mismatch with the
@@ -444,9 +443,8 @@ class PregelRunner:
             self.max_iterations,
             0,
         )
-        self._task_id = tid
         try:
-            out = self._run_loop(computation, graph, resume, n_parts)
+            out = self._run_loop(computation, graph, resume, n_parts, tid)
             _task_finish(tid, "FINISHED")
             return out
         except BaseException:
@@ -462,6 +460,7 @@ class PregelRunner:
         graph: Graph,
         resume: bool,
         n_parts: int,
+        tid: int,
     ) -> PregelResult:
         # repartition+sort+persist once per (graph, layout); cached on
         # the Graph handle so back-to-back runs (warmup, multi-algo
@@ -559,7 +558,7 @@ class PregelRunner:
                 "wall_sec": wall,
             }
             metrics.append(m)
-            _task_update(getattr(self, "_task_id", -1), iteration, n_active)
+            _task_update(tid, iteration, n_active)
             if self.checkpoint_dir:
                 # per-iteration run log next to the snapshots — the
                 # north_rule's metrics record; append-only jsonl on a

@@ -102,6 +102,16 @@ def test_estimation_tree_uses_exact_pairs():
     assert not any("exact" in c.name for c in heuristic.children)
 
 
+def test_estimation_tree_sizes_zero_exact_pairs_at_zero():
+    """An exact count of 0 pairs is a count, not a missing one: the
+    pair term is 0 bytes under the exact label, not the 4x|E|
+    heuristic."""
+    tree = estimation.node_similarity(1000, 3000, candidate_pairs=0)
+    (pair,) = [c for c in tree.children if c.name.startswith("pair shuffle")]
+    assert pair.name == "pair shuffle (exact co-neighbor count)"
+    assert pair.bytes == 0
+
+
 def test_engine_estimate_surfaces_pair_count(spark):
     gds = GdsEngine(spark)
     g = gds.graph.create("est_ns", edge_df(spark, [(1, 0), (2, 0), (3, 0)]))

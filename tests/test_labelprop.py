@@ -72,63 +72,18 @@ def test_labelprop_no_votes_keeps_label(spark, catalog):
     assert got[1] == 1 and got[0] == 1  # 0 adopts 1's label; 1 keeps it
 
 
-def test_chunk_ordered_agrees_at_convergence(spark, catalog):
-    """The opt-in reference-batch-semantics mode (chunk_ordered,
-    ComputeStep.java:82-92) reaches the same converged partition as
-    the default block Gauss-Seidel on the reference fixture."""
-    g = catalog.create("lpg_co", edge_df(spark, LP_EDGES), persist=True)
-    default = label_propagation(
-        spark, g, LabelPropagationConfig(max_iterations=20)
-    )
-    chunked = label_propagation(
-        spark, g, LabelPropagationConfig(max_iterations=20, chunk_ordered=3)
-    )
-    gd = {r["id"]: r["label"] for r in default.state.collect()}
-    gc = {r["id"]: r["label"] for r in chunked.state.collect()}
-    assert _partition_of(gd) == _partition_of(gc) == sorted(LP_PARTITION, key=min)
-
-
-def test_chunk_ordered_kills_two_cycle_oscillation(spark, catalog):
-    """A 2-cycle label swap oscillates forever under pure Jacobi; the
-    sequential chunk sweep converges immediately, like the
-    reference's in-place update."""
+def test_labelprop_two_cycle(spark, catalog):
+    """A 2-cycle's label swap oscillates forever under pure Jacobi
+    (blocks=1); block Gauss-Seidel ends it: even 0 adopts 1's label,
+    then odd 1 re-votes against it and keeps it."""
     g = catalog.create("lpg_cyc", edge_df(spark, [(0, 1), (1, 0)]), persist=True)
-    res = label_propagation(
-        spark, g, LabelPropagationConfig(max_iterations=10, chunk_ordered=2)
+    res = label_propagation(spark, g, LabelPropagationConfig(max_iterations=10))
+    assert {r["id"]: r["label"] for r in res.state.collect()} == {0: 1, 1: 1}
+    assert res.did_converge and res.ran_iterations == 2
+    jacobi = label_propagation(
+        spark, g, LabelPropagationConfig(max_iterations=10, blocks=1)
     )
-    got = {r["id"]: r["label"] for r in res.state.collect()}
-    assert got[0] == got[1]
-    assert res.did_converge
-
-
-def test_chunk_ordered_midrun_differs_from_blocked(spark, catalog):
-    """The DOCUMENTED divergence: iteration-bounded states depend on
-    the update order. On a directed chain gathering from the left
-    neighbor, one fully-sequential sweep (chunk per vertex) cascades
-    label 0 all the way down; the even/odd block sweep needs more
-    iterations, so the two modes disagree after max_iterations=1 —
-    while both reach the same fixpoint when run to convergence."""
-    chain = [(i + 1, i) for i in range(5)]  # arcs 1->0 ... 5->4 (gather left)
-    g = catalog.create("lpg_chain", edge_df(spark, chain), persist=True)
-    # directed=True in spirit: edge_df gives canonical arcs; the graph
-    # is undirected by default, so use a catalog graph as-is — votes
-    # flow both ways, the cascade argument still holds on the low side
-    seq = label_propagation(
-        spark, g, LabelPropagationConfig(max_iterations=1, chunk_ordered=6)
-    )
-    blk = label_propagation(spark, g, LabelPropagationConfig(max_iterations=1))
-    gs = {r["id"]: r["label"] for r in seq.state.collect()}
-    gb = {r["id"]: r["label"] for r in blk.state.collect()}
-    assert gs != gb  # order-dependent mid-run states, as documented
-    # fully sequential sweep: every vertex adopted the cascaded min
-    assert set(gs.values()) == {0}
-    # run to convergence: both agree
-    seq2 = label_propagation(
-        spark, g, LabelPropagationConfig(max_iterations=20, chunk_ordered=6)
-    )
-    blk2 = label_propagation(spark, g, LabelPropagationConfig(max_iterations=20))
-    assert _partition_of({r["id"]: r["label"] for r in seq2.state.collect()}) == \
-        _partition_of({r["id"]: r["label"] for r in blk2.state.collect()})
+    assert not jacobi.did_converge
 
 
 def test_labelprop_frees_sub_round_blocks(spark, catalog):

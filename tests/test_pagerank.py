@@ -19,7 +19,13 @@ from graph_data_science_spark.algorithms.pagerank import (
 )
 from graph_data_science_spark.algorithms.wcc import wcc
 from graph_data_science_spark.pregel import PregelComputation, PregelRunner
-from tests.conftest import PAGERANK_EDGES, PAGERANK_EXPECTED, WCC_EDGES, edge_df
+from tests.conftest import (
+    PAGERANK_EDGES,
+    PAGERANK_EXPECTED,
+    WCC_EDGES,
+    WCC_EXPECTED,
+    edge_df,
+)
 
 
 def _reference_sim(edges, n, max_iterations=41, tol=0.0, d=0.85):
@@ -116,6 +122,39 @@ def test_pagerank_parallelism_invariance(spark, catalog):
         spark.conf.set("spark.sql.shuffle.partitions", old)
     for v in r1:
         assert r1[v] == pytest.approx(r2[v], abs=1e-12)
+
+
+def test_salted_reduce_matches_plain(spark, catalog):
+    """The two-phase salted reduce (groupBy(dst, salt) then
+    groupBy(dst)) gives the plain reduce's answer: PageRank's sum to
+    rounding, WCC's min exactly."""
+    from graph_data_science_spark.algorithms.wcc import WccConfig, _WccComputation
+
+    g = _graph(spark, catalog, "prg_salted")
+    cfg = PageRankConfig(max_iterations=21, tolerance=0.0)
+    plain = {r["id"]: r["score"] for r in pagerank(spark, g, cfg).state.collect()}
+    salted = pagerank(spark, g, cfg, salt_buckets=4)
+    got = {r["id"]: r["score"] for r in salted.state.collect()}
+    assert got.keys() == plain.keys()
+    assert np.allclose(
+        [got[v] for v in plain], list(plain.values()), rtol=0.0, atol=1e-12
+    )
+
+    und = WCC_EDGES + [(d, s) for s, d in WCC_EDGES]
+    gw = catalog.create("wcc_salted", edge_df(spark, und), persist=True)
+    runs = {}
+    for salt in (0, 4):
+        res = PregelRunner(spark, max_iterations=50, salt_buckets=salt).run(
+            _WccComputation(WccConfig(), None), gw
+        )
+        assert res.did_converge
+        runs[salt] = {r["id"]: r["component"] for r in res.state.collect()}
+    assert runs[4] == runs[0] == WCC_EXPECTED
+
+    # the salted plan really is the two-phase one
+    msgs = spark.createDataFrame([(1, 2.0), (1, 3.0)], "dst long, msg double")
+    plan = PregelRunner(spark, salt_buckets=4)._reduce(msgs, "min")
+    assert "_salt" in plan._jdf.queryExecution().analyzed().toString()
 
 
 def test_pagerank_scaler_variants(spark, catalog):

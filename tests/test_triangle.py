@@ -4,8 +4,6 @@ exclusion marks -1, LCC formula 2t/(d(d-1))."""
 
 import math
 
-import pytest
-
 from graph_data_science_spark.algorithms.triangle import (
     local_clustering_coefficient,
     triangle_count,
@@ -13,12 +11,9 @@ from graph_data_science_spark.algorithms.triangle import (
 from tests.conftest import edge_df, persistent_rdd_ids
 
 
-@pytest.mark.parametrize("degree_ordering", [True, False])
-def test_single_triangle(spark, catalog, degree_ordering):
-    g = catalog.create(
-        f"tri1_{degree_ordering}", edge_df(spark, [(0, 1), (1, 2), (2, 0)])
-    )
-    res = triangle_count(spark, g, degree_ordering=degree_ordering)
+def test_single_triangle(spark, catalog):
+    g = catalog.create("tri1", edge_df(spark, [(0, 1), (1, 2), (2, 0)]))
+    res = triangle_count(spark, g)
     assert res.global_count == 1
     assert {r["id"]: r["triangles"] for r in res.local_counts.collect()} == {
         0: 1, 1: 1, 2: 1,
